@@ -32,7 +32,8 @@ Parameter mapping (reference name -> here):
   tol           PageRank convergence threshold (default 1e-6)
   directed      0 symmetrizes the edge table before running (default 1)
   threshold     frontier broadcast threshold -> GASEngine.broadcast_threshold
-  stats         1 prints per-superstep metrics to stderr
+  stats         1 prints one line of metrics per superstep to stderr
+                (GAS algorithms; off by default)
   salt          gather salt buckets (two-level skew aggregation)
   partitions    shuffle/loop partition count
   checkpoint    checkpoint dir (resume with resume=1)
@@ -199,7 +200,7 @@ def run(argv: Sequence[str] | None = None) -> int:
 
         edges = symmetrize(edges)
 
-    eng_kw = {"collect_metrics": int(params.get("stats", "0")) == 1}
+    eng_kw = {}
     if "threshold" in params:
         eng_kw["broadcast_threshold"] = int(params["threshold"])
     if "salt" in params:
@@ -215,8 +216,8 @@ def run(argv: Sequence[str] | None = None) -> int:
     result = _dispatch(spark, args.algo, edges, params, eng_kw, resume, iter_num,
                        args.sources)
     df, metrics = result
-    if metrics:
-        for mt in metrics:
+    if int(params.get("stats", "0")) == 1:
+        for mt in metrics or ():
             print(f"superstep {mt.superstep}: frontier={mt.frontier_size} "
                   f"edges={mt.edges_traversed} wall_ms={mt.wall_ms:.0f}",
                   file=sys.stderr)

@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.gas import GASEngine, GASProgram, GASResult
-from ..sources.edges import vertex_frame
 
 
 def bfs_program() -> GASProgram:
@@ -59,17 +58,12 @@ def bfs(
     or a one-column DataFrame of source ids, so a computed source (e.g.
     ``vertices.agg(min(id))``) never forces a driver-side collect inside
     the measured query. Source ids not present in the graph are ignored.
+    With ``engine=``, the engine's edge table is the graph and ``edges``
+    is not read.
     """
     if engine is None:
         engine = GASEngine(spark, edges, **engine_kwargs)
-        # setup frames derive from the engine's one endpoint-stats
-        # aggregation (see GASEngine.vertex_stats) instead of a separate
-        # vertex_frame distinct over the raw lineage
-        edges = engine.edges_partitioned("src")
-        if vertices is None:
-            vertices = engine.vertex_stats("fwd").select("id")
-    if vertices is None:
-        vertices = vertex_frame(edges)
+    vertices = engine.initial_stats("fwd", vertices)
     marked = _mark_sources(vertices, source)
     v0 = marked.select(
         "id",
@@ -106,8 +100,8 @@ def random_sources(
     which retries until the source has outgoing edges). Ranks candidate
     vertices by a seeded hash and takes the first n with out-edges; one
     distributed top-n job, no driver-side retry loop."""
-    cand = edges.select(F.col("src").alias("id")).distinct() if require_out_edges \
-        else vertex_frame(edges)
+    ends = ["src"] if require_out_edges else ["src", "dst"]
+    cand = edges.select(F.explode(F.array(*ends)).alias("id")).distinct()
     rows = (
         cand.withColumn("_r", F.xxhash64(F.col("id"), F.lit(seed)))
         .orderBy("_r")

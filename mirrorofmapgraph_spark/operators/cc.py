@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.gas import GASEngine, GASProgram, GASResult
-from ..sources.edges import vertex_frame
 
 
 def cc_program(expand_dir: str = "all") -> GASProgram:
@@ -59,7 +58,8 @@ def connected_components(
     Isolated vertices (present in ``vertices`` but not in ``edges``) keep
     label = their own id — their own singleton component (mirrors the
     reference, where every vertex 0..n-1 exists; cc.cu:184-192 counts
-    components as distinct labels).
+    components as distinct labels). With ``engine=``, the engine's edge
+    table is the graph and ``edges`` is not read.
     """
     # pre_symmetrized tables already hold both directions -> expand "out";
     # raw directed tables are traversed in both directions natively.
@@ -75,18 +75,9 @@ def connected_components(
             # Pass dual_index=False to trade back at memory-bound scale.
             engine_kwargs.setdefault("dual_index", True)
         engine = GASEngine(spark, edges, **engine_kwargs)
-        # setup frames derive from the engine's one endpoint-stats
-        # aggregation (see GASEngine.vertex_stats) instead of a separate
-        # vertex_frame distinct over the raw lineage
-        edges = engine.edges_partitioned("src")
-        if vertices is None:
-            vertices = engine.vertex_stats(
-                "fwd" if pre_symmetrized else "both"
-            ).select("id")
-    if vertices is None:
-        vertices = vertex_frame(edges)
-    v0 = vertices.select("id", F.col("id").alias("label"))
-    frontier0 = vertices.select("id")  # srcVertex() == ALL (cc.h:68-71)
+    stats = engine.initial_stats("fwd" if pre_symmetrized else "both", vertices)
+    v0 = stats.select("id", F.col("id").alias("label"))
+    frontier0 = stats.select("id")  # srcVertex() == ALL (cc.h:68-71)
     return engine.run(
         cc_program(expand_dir), v0, frontier0, max_iter=max_iter, resume=resume
     )

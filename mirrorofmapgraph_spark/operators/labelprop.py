@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.gas import GASEngine, GASProgram, GASResult
-from ..sources.edges import canonical_undirected, vertex_frame
+from ..sources.edges import canonical_undirected
 
 
 def _mode_aggregate(msgs: DataFrame) -> DataFrame:
@@ -91,18 +91,16 @@ def label_propagation(
     every undirected edge exactly once — traversed forward only (the
     legacy layout; twice the rows of the canonical table).
 
-    When passing ``engine=``, build it over the SAME table this function
-    would use: ``canonical_undirected(edges)`` (default) or the
-    symmetrized table (with ``pre_symmetrized=True``).
+    ``engine=``: its table is the graph (``edges`` is not read) — the
+    canonical ``canonical_undirected`` table, or the symmetrized one with
+    ``pre_symmetrized=True``.
     """
-    if pre_symmetrized:
-        und = edges
-        prog_dir = "in"
-    else:
-        und = canonical_undirected(edges)
-        prog_dir = "all"
+    prog = labelprop_program()
+    prog.gather_dir = "in" if pre_symmetrized else "all"
     if engine is None:
-        if prog_dir == "all":
+        und = edges
+        if not pre_symmetrized:
+            und = canonical_undirected(edges)
             # dual CSR+CSC layout for "all"-direction traversal (see the
             # cc.py note): no reverse-pass exchange per superstep, second
             # copy built cache-to-cache. Measured at sf0.1: labelprop2
@@ -111,18 +109,7 @@ def label_propagation(
         engine = GASEngine(
             spark, und, num_partitions=num_partitions, **engine_kwargs
         )
-        # setup frames derive from the engine's one endpoint-stats
-        # aggregation (see GASEngine.vertex_stats) instead of a separate
-        # vertex_frame distinct re-running the canonical-undirected build
-        und = engine.edges_partitioned("src")
-        if vertices is None:
-            vertices = engine.vertex_stats(
-                "both" if prog_dir == "all" else "fwd"
-            ).select("id")
-    if vertices is None:
-        vertices = vertex_frame(und)
-    prog = labelprop_program()
-    prog.gather_dir = prog_dir
-    v0 = vertices.select("id", F.col("id").alias("label"))
-    frontier0 = vertices.select("id")
+    stats = engine.initial_stats("fwd" if pre_symmetrized else "both", vertices)
+    v0 = stats.select("id", F.col("id").alias("label"))
+    frontier0 = stats.select("id")
     return engine.run(prog, v0, frontier0, max_iter=max_iter, resume=resume)

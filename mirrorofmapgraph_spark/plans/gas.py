@@ -144,7 +144,7 @@ class GASProgram:
     #: "every sender changed" instead of "every vertex changed" — exact
     #: (next frontier = all receivers iff all senders changed) and robust
     #: on real link graphs where dangling vertices stop changing after
-    #: step 1 and would otherwise disable the fast path + fusion forever.
+    #: step 1 and would otherwise disable the fast path forever.
     has_out_edges: Callable[[DataFrame], Column] | None = None
     #: push mode: which edges frontier vertices expand over — "out"
     #: (default), "in" (reversed), or "all" (BOTH directions of the one
@@ -221,7 +221,6 @@ class GASEngine:
         checkpoint_every: int = 0,
         collect_metrics: bool = True,
         num_partitions: int | None = None,
-        fuse_supersteps: int = 1,
         dual_index: bool = False,
     ) -> None:
         self.spark = spark
@@ -229,31 +228,11 @@ class GASEngine:
         self.salt_buckets = salt_buckets
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
+        #: accepted and unused: every run records its SuperstepMetrics
         self.collect_metrics = collect_metrics
         #: explicit num_partitions pins the loop partitioning; None defers
-        #: to _ensure_partitions (edge-count-based auto-sizing).
+        #: to the edge-count-based auto-sizing in edges_partitioned.
         self.num_partitions = num_partitions
-        #: pull-mode all-changed regime: chain up to this many gather+apply
-        #: supersteps into ONE job (see _run_fused_block). 1 disables —
-        #: the measured default: each chained superstep references the
-        #: previous state subtree twice (gather join + apply join), so the
-        #: logical plan doubles per fused step, and in local mode the
-        #: planning + stage overhead of the 2^k-node plan exceeds the
-        #: per-job fixed cost it amortizes (sf0.1 PageRank: k=3 ran
-        #: ~100-109 s vs ~70-87 s sequential; the round-5 k=2 re-measure
-        #: after the shuffle-alignment + checkpoint-release fixes was a
-        #: wash — min-of-interleaved-reps 46.8 s fused vs 45.2 s
-        #: sequential, identical ranks — because the per-step floor is
-        #: Catalyst planning (~0.3 s toRdd + ~0.2 s plan build per step,
-        #: profiled), which chaining re-plans rather than amortizes). The
-        #: option remains for cluster deployments where driver/scheduler
-        #: round-trips per job dominate; results are exactly equivalent
-        #: either way (validated per-block via observations, tested).
-        #: What DID land from that experiment: the partial-frontier job
-        #: shape in _run_loop (state+frontier+metrics in ONE job) and the
-        #: marker-free pull apply — together -42% jobs per converged run
-        #: (584 -> 341 on the 82-step sf0.01 fixture).
-        self.fuse_supersteps = fuse_supersteps
         #: "both"-direction traversal: False (default) runs the reverse
         #: pass over the SAME src-partitioned copy (persisted once; the
         #: reverse join rides the frontier broadcast, or shuffles edges on
@@ -264,33 +243,32 @@ class GASEngine:
         self.dual_index = dual_index
         self._edges_raw = edges
         self._edges_by: dict[str, DataFrame] = {}
+        #: per-direction endpoint statistics, computed once each (see
+        #: vertex_stats)
+        self._vstats: dict[str, DataFrame] = {}
+        #: constant all-receivers frontiers per direction key, and their
+        #: sizes, computed once each (see _all_receivers)
+        self._all_recv: dict[str, DataFrame] = {}
+        self._all_recv_count: dict[str, int] = {}
+        #: (senders, receivers) scalar readbacks per direction key, ONE job
+        self._endpoint_counts_cache: dict[str, tuple[int, int]] = {}
+        #: "all senders changed" regime refinement, set per run() from
+        #: program.has_out_edges (see GASProgram)
+        self._sender_pred = None
+        self._n_senders: int | None = None
 
-    def _ensure_partitions(self) -> int:
-        """Auto-size the loop's partition count on first use: ~500k edges
-        per partition, clamped to [4, spark.sql.shuffle.partitions]. A
+    @staticmethod
+    def _auto_partitions(rows: int, cap: int) -> int:
+        """The loop's partition count for ``rows`` edges: ~500k edges per
+        partition, clamped to [4, spark.sql.shuffle.partitions]. A
         76-superstep loop at 32 partitions on a 0.6M-edge graph spends
         more wall on task scheduling than on data (measured 71.5s -> 55.6s
         at 8 partitions, sf0.1; floor 8 -> 4 re-measured this round as a
         further 13.99 -> 13.17 s interleaved min — the floor only binds
         graphs under 2M edges, where per-step task count IS the wall; at
         cluster scale the size-derived term and the configured
-        shuffle-partition ceiling govern). One extra edge-count scan,
-        amortized over the whole iterative run; pass ``num_partitions``
-        explicitly to skip it."""
-        if self.num_partitions is None:
-            cap = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            # Prefer counting an already-persisted copy (columnar cache scan)
-            # over re-executing the raw lineage — callers normally reach
-            # this through edges_partitioned(), whose bootstrap both
-            # materializes and counts in one pass (see there).
-            src = (
-                next(iter(self._edges_by.values()))
-                if self._edges_by
-                else self._edges_raw
-            )
-            m = src.count()
-            self.num_partitions = max(4, min(cap, -(-m // 500_000)))
-        return self.num_partitions
+        shuffle-partition ceiling govern)."""
+        return max(4, min(cap, -(-rows // 500_000)))
 
     # -- lineage + statistics cut (the ping-pong buffer swap) ---------------
 
@@ -403,15 +381,12 @@ class GASEngine:
                 # costs exactly the old two-pass bootstrap.
                 cap = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
                 est = self._estimate_edge_rows()
-                p_boot = (
-                    cap if est is None
-                    else max(4, min(cap, -(-est // 500_000)))
-                )
+                p_boot = cap if est is None else self._auto_partitions(est, cap)
                 boot = self._edges_raw.repartition(p_boot, F.col(key)).persist(
                     StorageLevel.MEMORY_AND_DISK
                 )
                 m = boot.count()
-                self.num_partitions = max(4, min(cap, -(-m // 500_000)))
+                self.num_partitions = self._auto_partitions(m, cap)
                 if self.num_partitions == p_boot:
                     self._edges_by[key] = boot
                     return boot
@@ -431,7 +406,7 @@ class GASEngine:
                     else self._edges_raw
                 )
                 df = src_df.repartition(
-                    self._ensure_partitions(), F.col(key)
+                    self.num_partitions, F.col(key)
                 ).persist(StorageLevel.MEMORY_AND_DISK)
             self._edges_by[key] = df
         return self._edges_by[key]
@@ -487,21 +462,12 @@ class GASEngine:
         for df in self._edges_by.values():
             df.unpersist()
         self._edges_by.clear()
-        if self._vstats:
-            for df in self._vstats.values():
-                self._release_cut(df)
+        for df in self._vstats.values():
+            self._release_cut(df)
         self._vstats = {}
         self._all_recv = {}
         self._all_recv_count = {}
         self._endpoint_counts_cache = {}
-
-    #: constant all-receivers frontiers per aggregation key ("dst" for
-    #: GATHER_IN_EDGES, "src" for GATHER_OUT_EDGES), computed once each
-    _all_recv: dict = None
-    _all_recv_count: dict = None
-    #: per-direction endpoint statistics, computed once each (see
-    #: vertex_stats)
-    _vstats: dict = None
 
     def vertex_stats(self, dkey: str = "fwd") -> DataFrame:
         """(id, n_src, n_dst[, w_src]) over the oriented frames of ``dkey``,
@@ -515,8 +481,6 @@ class GASEngine:
         same table (measured ~8 s of pre-loop jobs on the sf0.1 converged
         PageRank). Derived views: vertex set = select(id); receivers =
         filter(n_dst > 0); senders count = filter(n_src > 0).count()."""
-        if self._vstats is None:
-            self._vstats = {}
         if dkey not in self._vstats:
             frames = self._oriented(dkey)
             has_w = "w" in frames[0].columns
@@ -554,20 +518,27 @@ class GASEngine:
             # (endpoint counts, v0) read the materialized blocks.
             self._vstats[dkey] = self._cut(df.groupBy("id").agg(*aggs), eager=False)
         return self._vstats[dkey]
-    #: "all senders changed" regime refinement, set per run() from
-    #: program.has_out_edges (see GASProgram)
-    _sender_pred = None
-    _n_senders: int | None = None
-    #: (senders, receivers) scalar readbacks per direction key, ONE job
-    _endpoint_counts_cache: dict = None
+
+    def initial_stats(
+        self, dkey: str, vertices: DataFrame | None = None
+    ) -> DataFrame:
+        """The one setup frame every GAS operator derives its initial state
+        and frontier from: ``vertex_stats(dkey)``, or — when the caller
+        passes an explicit (id) ``vertices`` frame, e.g. to include
+        isolated vertices — those stats left-joined onto it, missing
+        counts and weights read as 0. Either way the vertex set and the
+        gather table come from this engine's one edge table."""
+        stats = self.vertex_stats(dkey)
+        if vertices is None:
+            return stats
+        counts = [c for c in ("n_src", "n_dst", "w_src") if c in stats.columns]
+        return vertices.select("id").join(stats, "id", "left").fillna(0, counts)
 
     def _endpoint_counts(self, dkey: str) -> tuple[int, int]:
         """(n_senders, n_receivers) of the oriented direction — one
         aggregation job over the materialized vertex_stats instead of two
         separate filtered counts (each scalar readback is a full job; the
         loop setup pays them serially)."""
-        if self._endpoint_counts_cache is None:
-            self._endpoint_counts_cache = {}
         if dkey not in self._endpoint_counts_cache:
             r = (
                 self.vertex_stats(dkey)
@@ -610,8 +581,6 @@ class GASEngine:
         message' = ids with n_dst > 0 — a cheap filtered view of the one
         materialized vertex_stats aggregation (no extra distinct shuffle).
         Stored once so the regime test's identity check keeps working."""
-        if self._all_recv is None:
-            self._all_recv, self._all_recv_count = {}, {}
         if dkey not in self._all_recv:
             df = self.vertex_stats(dkey).filter(F.col("n_dst") > 0).select("id")
             self._all_recv[dkey] = df
@@ -744,7 +713,7 @@ class GASEngine:
             # 8) — EnsureRequirements then re-shuffles the mismatched side
             # EVERY superstep and every stage schedules 4x the tasks the
             # data needs. Session value restored after the loop.
-            "spark.sql.shuffle.partitions": str(self._ensure_partitions()),
+            "spark.sql.shuffle.partitions": str(self.num_partitions),
             # Constraint propagation is pure per-step planning cost here
             # (SPARK-19846: quadratic in plan width, recomputed every
             # superstep because every superstep is a fresh plan); the loop
@@ -780,7 +749,7 @@ class GASEngine:
         # the materializing actions, so entry state+frontier cost two jobs
         # instead of four (eager checkpoint + separate count each).
         vertices = self._cut(
-            vertices.repartition(self._ensure_partitions(), F.col("id")),
+            vertices.repartition(self.num_partitions, F.col("id")),
             eager=False,
         )
         frontier = self._cut(frontier, eager=False)
@@ -805,17 +774,7 @@ class GASEngine:
         # localCheckpoint accumulates in the block manager for the whole
         # run — measured as a per-step wall creep from ~0.7 s to ~2-3 s by
         # step 70 of a 76-superstep converged PageRank.
-        prev_state: DataFrame | None = vertices
-        # Optional superstep fusion (pull mode, all-changed regime): once a
-        # sequential superstep reports all senders changed, chain the next
-        # k gather+apply supersteps into ONE job to amortize per-job fixed
-        # cost. Exactness: per-step Observations ride the single
-        # materialization; a block commits only while every internal step
-        # stayed all-changed (identical frontier semantics), otherwise it
-        # is discarded and the steps replay sequentially from the
-        # committed state. OFF by default — see the fuse_supersteps
-        # constructor note for the measured local-mode tradeoff.
-        fuse_on = self.fuse_supersteps > 1 and program.mode == "pull"
+        prev_state = vertices
         # regime predictor for the job shape below (correctness does not
         # depend on it — both shapes are exact): a full entry frontier
         # suggests an all-vertex program whose first steps stay all-changed
@@ -846,43 +805,6 @@ class GASEngine:
             return a, a_obs, o
 
         while frontier_size > 0 and step < max_iter:
-            if fuse_on and prev_changed_all and max_iter - step >= 2:
-                spec_pack = None  # fused blocks build their own chain
-                spec_plan = None
-                k = min(self.fuse_supersteps, max_iter - step)
-                block = self._run_fused_block(
-                    program, vertices, frontier, frontier_size, k, metrics, step
-                )
-                if block is None:
-                    # left the all-changed regime mid-block: replay
-                    # sequentially from the committed state; the regime
-                    # never re-enters once convergence begins to localize
-                    fuse_on = False
-                else:
-                    vertices, frontier, frontier_size, done, still_all = block
-                    step += done
-                    prev_changed_all = still_all
-                    fuse_on = fuse_on and still_all
-                    # fused-path frontiers join the same stale-release
-                    # rotation as sequential ones (unpersist is a no-op on
-                    # the shared all-receivers frame, which is
-                    # localCheckpointed, not cache-managed)
-                    while len(stale) > 1:
-                        stale.pop(0).unpersist()
-                    stale.append(frontier)
-                    if prev_state is not None:
-                        self._release_cut(prev_state)
-                    prev_state = vertices
-                    if (
-                        self.checkpoint_dir
-                        and self.checkpoint_every
-                        and (step // self.checkpoint_every)
-                        > ((step - done) // self.checkpoint_every)
-                    ):
-                        self.write_checkpoint(
-                            program.name, step, vertices, frontier, metrics
-                        )
-                    continue
             t0 = time.monotonic()
             if spec_pack is not None:
                 applied, applied_obs, obs = spec_pack  # prebuilt last step
@@ -910,7 +832,7 @@ class GASEngine:
             # sequential execution would have built the identical plan,
             # else it is discarded unexecuted. Two job shapes by regime:
             vertices = applied.drop("_changed", "_msg_cnt")
-            mat_err: list[BaseException] = []
+            speculate = step + 1 < max_iter
             if program.mode == "pull" and prev_changed_all:
                 # ALL-CHANGED regime: the metrics ride the checkpoint
                 # materialization (one count job over the observed
@@ -920,26 +842,18 @@ class GASEngine:
                 # constant all-receivers set), and the speculative pack
                 # assumes the regime holds — the condition the consumer
                 # checks below.
-                def _materialize(df=applied_obs, err=mat_err):
-                    try:
-                        df.count()
-                    except BaseException as e:  # re-raised after join
-                        err.append(e)
-
-                mat = InheritableThread(target=_materialize, daemon=True)
-                mat.start()
                 dkey = self._dir_key(program)
-                all_recv = self._all_receivers(dkey)
-                cand = None
-                if step + 1 < max_iter:
-                    cand = _cut_observe(
-                        superstep_fn(
-                            program, vertices, all_recv, self._all_recv_count[dkey]
-                        )
-                    )
-                mat.join()
-                if mat_err:
-                    raise mat_err[0]
+
+                def _speculate():
+                    # the first call's receiver count is a job of its own;
+                    # it too runs beside the materialization
+                    recv = self._all_receivers(dkey)
+                    if not speculate:
+                        return recv, None
+                    n = self._all_recv_count[dkey]
+                    return recv, _cut_observe(superstep_fn(program, vertices, recv, n))
+
+                _, (all_recv, cand) = self._overlap(applied_obs.count, _speculate)
                 row = self._read_observation(obs, applied)
                 if self._all_changed(row):
                     frontier = all_recv
@@ -958,7 +872,7 @@ class GASEngine:
                 # AND the metrics (the frontier plan reads every applied
                 # row anyway for the _changed filter) — halves the
                 # per-superstep job count where the all-changed fast path
-                # can't engage. The speculative pack is built with the
+                # can't engage. The speculative plan is built with the
                 # PRE-step size as the estimate: the plan depends on the
                 # still-unknown next frontier size only through two
                 # discrete predicates (all-frontier? broadcast-size?), so
@@ -968,23 +882,11 @@ class GASEngine:
                     program, applied_obs, frontier_size
                 ).persist(StorageLevel.MEMORY_AND_DISK)
                 est_fs = frontier_size
-                cnt_out: list[int] = []
-
-                def _count_frontier(df=frontier, out=cnt_out, err=mat_err):
-                    try:
-                        out.append(df.count())
-                    except BaseException as e:  # re-raised after join
-                        err.append(e)
-
-                mat = InheritableThread(target=_count_frontier, daemon=True)
-                mat.start()
-                cand = None
-                if step + 1 < max_iter:
-                    cand = superstep_fn(program, vertices, frontier, est_fs)
-                mat.join()
-                if mat_err:
-                    raise mat_err[0]
-                frontier_size = cnt_out[0]  # one job: state+frontier
+                frontier_size, cand = self._overlap(  # one job: state+frontier
+                    frontier.count,
+                    lambda: superstep_fn(program, vertices, frontier, est_fs)
+                    if speculate else None,
+                )
                 row = self._read_observation(obs, applied)
                 if cand is not None and self._plan_preds(
                     est_fs
@@ -998,20 +900,13 @@ class GASEngine:
             metrics.append(
                 SuperstepMetrics(step, frontier_size, traversed, changed_n, wall_ms)
             )
-            if os.environ.get("MOMG_GAS_DEBUG"):
-                print(
-                    f"[gas:{program.name}] step={step} frontier={frontier_size} "
-                    f"traversed={traversed} changed={changed_n} ms={wall_ms:.0f}",
-                    flush=True,
-                )
             # release frontier frames two generations back
             while len(stale) > 1:
                 stale.pop(0).unpersist()
             stale.append(frontier)
             # the pre-superstep state is now superseded (the new state and
             # frontier are materialized above); free its checkpoint blocks
-            if prev_state is not None:
-                self._release_cut(prev_state)
+            self._release_cut(prev_state)
             prev_state = applied
             if (
                 self.checkpoint_dir
@@ -1029,89 +924,35 @@ class GASEngine:
             converged=frontier_size == 0,
         )
 
-    def _run_fused_block(
-        self,
-        program: GASProgram,
-        vertices: DataFrame,
-        frontier: DataFrame,
-        frontier_size: int,
-        k: int,
-        metrics: list[SuperstepMetrics],
-        step0: int,
-    ) -> tuple[DataFrame, DataFrame, int, int, bool] | None:
-        """Run k pull-mode supersteps as ONE chained plan + materialization.
+    @staticmethod
+    def _overlap(job: Callable[[], int], driver_work: Callable[[], object]):
+        """Run ``job`` (a superstep's materializing Spark action) on a
+        background thread while ``driver_work`` (the speculative build of
+        the next superstep) runs on the driver; returns both results.
 
-        Valid only while the all-changed regime holds: step i+1's frontier
-        is assumed to be the constant all-receivers set, which sequential
-        execution would use iff step i reported changed == |V|. Per-step
-        Observations ride the single materialization and are checked after
-        the fact:
-        - every step all-changed -> commit all k (next frontier =
-          all-receivers, fusion continues);
-        - only the LAST step partial -> the state is still exact (a step's
-          own changed count only affects the frontier AFTER it), so commit
-          all k and compute the next frontier from the final _changed
-          flags (fusion stops);
-        - an EARLIER step partial -> the block diverged; discard it and
-          let the caller replay sequentially from the committed state (at
-          most one discarded block per run, bounded waste).
+        The thread is joined even when ``driver_work`` raises, so no
+        Spark job outlives the loop; an error from ``job`` is re-raised
+        here, on the caller's thread."""
+        out: list = []
+        err: list[BaseException] = []
 
-        Returns (vertices, frontier, frontier_size, steps_done,
-        still_all_changed) or None when discarded.
-        """
-        t0 = time.monotonic()
-        dkey = self._dir_key(program)
-        all_recv = self._all_receivers(dkey)
-        all_recv_n = self._all_recv_count[dkey]
-        cur, f, fs = vertices, frontier, frontier_size
-        observations: list[Observation] = []
-        for i in range(k):
-            applied = self._superstep_pull(program, cur, f, fs)
-            applied, obs = self._observe_applied(applied)
-            observations.append(obs)
-            cur = applied if i == k - 1 else applied.drop("_changed", "_msg_cnt")
-            f, fs = all_recv, all_recv_n
-        final = self._cut(cur)
-        rows = [self._read_observation(o, None) for o in observations]
-        if any(r is None for r in rows):
-            # metrics did not surface; replay sequentially — free the
-            # discarded block's eager checkpoint first
-            self._release_cut(final)
-            return None
-        changed = [int(r["ch"] or 0) for r in rows]
-        changed_all = [self._all_changed(r) for r in rows]
-        if not all(changed_all[:-1]):
-            self._release_cut(final)
-            return None  # diverged mid-block
-        wall_ms = (time.monotonic() - t0) * 1000.0
-        new_vertices = final.drop("_changed", "_msg_cnt")
-        last_all = changed_all[-1]
-        if last_all:
-            next_frontier, next_size = all_recv, all_recv_n
-        else:
-            next_frontier = self._next_frontier(program, final, all_recv_n).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            next_size = next_frontier.count()
-        for i in range(k):
-            fsz = (all_recv_n if last_all else next_size) if i == k - 1 else all_recv_n
-            metrics.append(
-                SuperstepMetrics(
-                    step0 + i + 1, fsz, int(rows[i]["tr"] or 0), changed[i],
-                    wall_ms / k,
-                )
-            )
-        if os.environ.get("MOMG_GAS_DEBUG"):
-            print(
-                f"[gas:{program.name}] fused block steps={step0 + 1}..{step0 + k} "
-                f"changed={changed} ms={wall_ms:.0f}",
-                flush=True,
-            )
-        return new_vertices, next_frontier, next_size, k, last_all
+        def _target():
+            try:
+                out.append(job())
+            except BaseException as e:  # re-raised after join
+                err.append(e)
 
-    def _read_observation(
-        self, obs: Observation, applied_ck: DataFrame | None
-    ) -> dict | None:
+        mat = InheritableThread(target=_target, daemon=True)
+        mat.start()
+        try:
+            spec = driver_work()
+        finally:
+            mat.join()
+        if err:
+            raise err[0]
+        return out[0], spec
+
+    def _read_observation(self, obs: Observation, applied_ck: DataFrame) -> dict:
         """Read the per-superstep metrics with a bounded wait.
 
         The observation normally fires with the eager ``localCheckpoint``
@@ -1131,8 +972,6 @@ class GASEngine:
         t.join(timeout=30.0)
         if holder:
             return holder
-        if applied_ck is None:
-            return None  # fused-block caller treats missing metrics as invalid
         # the daemon thread stays parked on obs.get (harmless); recompute
         agg = applied_ck.agg(
             F.sum(F.col("_changed").cast("long")).alias("ch"),
@@ -1270,8 +1109,8 @@ class GASEngine:
         #    every message receiver is in by construction): skip the filter
         #    — apply's _in_frontier gate discards the rest, exact same
         #    result for less work.
-        is_all = frontier_size >= self._n_vertices or (
-            self._all_recv is not None and frontier is self._all_recv.get(dkey)
+        is_all = (
+            frontier_size >= self._n_vertices or frontier is self._all_recv.get(dkey)
         )
         parts = []
         for edges in frames:

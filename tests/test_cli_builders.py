@@ -111,20 +111,27 @@ def test_cli_pagerank_mtx_to_text(spark, tmp_path):
     assert ranks[0] == pytest.approx(1.0, abs=1e-4)  # 0.15/(1-0.85)
 
 
-def test_cli_bfs_generator_sources_and_params(spark, tmp_path):
+def test_cli_bfs_generator_sources_and_params(spark, tmp_path, capsys):
     from mirrorofmapgraph_spark.cli import run
 
     out = tmp_path / "depths"
     srcfile = tmp_path / "srcs.txt"
     srcfile.write_text("c comment\n3\n")  # 1-based source 3 -> vertex 2
-    rc = run([
-        "bfs", "-g", "grid2d:width=4", "-o", str(out), "-s", str(srcfile),
-        "-p", "origin=1 iter_num=20",
-    ])
+    argv = ["bfs", "-g", "grid2d:width=4", "-s", str(srcfile)]
+    capsys.readouterr()
+    rc = run(argv + ["-o", str(out), "-p", "origin=1 iter_num=20"])
     assert rc == 0
+    assert "superstep" not in capsys.readouterr().err  # metrics need stats=1
     got = {r["id"]: r["depth"] for r in spark.read.parquet(str(out)).collect()}
     # source vertex 2 = (x=2,y=0); depth = manhattan distance to it
     assert got == {y * 4 + x: abs(x - 2) + y for x in range(4) for y in range(4)}
+
+    rc = run(argv + ["-o", str(tmp_path / "depths2"), "-p", "origin=1 stats=1"])
+    assert rc == 0
+    steps = [ln.split(":")[0] for ln in capsys.readouterr().err.splitlines()
+             if ln.startswith("superstep ")]
+    # one line per superstep: depths 1..5 discovered, then one empty step
+    assert steps == [f"superstep {i}" for i in range(1, max(got.values()) + 2)]
 
 
 def test_cli_config_file_and_ignored_params(spark, tmp_path, capsys):

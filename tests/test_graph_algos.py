@@ -334,7 +334,9 @@ def test_cc_native_all_matches_symmetrized(spark, make_edges, make_vertices):
 
 def test_cc_dual_index_matches_single_copy(spark, make_edges, make_vertices):
     """dual_index=True (CSR+CSC second partitioned copy) is a pure
-    physical layout choice — identical results."""
+    physical layout choice — identical results. A caller-supplied engine
+    without ``vertices`` takes its vertex set from the engine's table,
+    exactly as a self-built one does."""
     from mirrorofmapgraph_spark.plans.gas import GASEngine
     from mirrorofmapgraph_spark.sources.edges import canonicalize
 
@@ -349,6 +351,12 @@ def test_cc_dual_index_matches_single_copy(spark, make_edges, make_vertices):
     ga = {r["id"]: r["label"] for r in a.vertices.collect()}
     gb = {r["id"]: r["label"] for r in b.vertices.collect()}
     assert ga == gb
+    own = connected_components(spark, e)
+    given = connected_components(spark, e, engine=GASEngine(spark, e))
+    go = {r["id"]: r["label"] for r in own.vertices.collect()}
+    assert {r["id"]: r["label"] for r in given.vertices.collect()} == go
+    assert set(go) == {x for s, d, _ in edges for x in (s, d)}
+    assert go == {v: ga[v] for v in go}
 
 
 def test_labelprop_canonical_matches_symmetrized(spark, make_edges):
@@ -357,7 +365,12 @@ def test_labelprop_canonical_matches_symmetrized(spark, make_edges):
     matter for the mode combiner, not just connectivity) — including on a
     graph with reciprocal directed pairs."""
     from mirrorofmapgraph_spark.operators.labelprop import label_propagation
-    from mirrorofmapgraph_spark.sources.edges import canonicalize, symmetrize
+    from mirrorofmapgraph_spark.plans.gas import GASEngine
+    from mirrorofmapgraph_spark.sources.edges import (
+        canonical_undirected,
+        canonicalize,
+        symmetrize,
+    )
 
     n = 100
     edges = random_graph(n=n, m=260, seed=23)
@@ -365,12 +378,18 @@ def test_labelprop_canonical_matches_symmetrized(spark, make_edges):
     # over a directed table would double-count)
     edges = edges + [(d, s, w) for s, d, w in edges[:40]]
     e = canonicalize(make_edges(edges))
+    # a caller-supplied engine over the canonical table, without vertices
+    engine = GASEngine(spark, canonical_undirected(e))
     for k in (1, 2, 5):
         a = label_propagation(spark, e, max_iter=k)
         b = label_propagation(spark, symmetrize(e), max_iter=k, pre_symmetrized=True)
+        c = label_propagation(spark, e, max_iter=k, engine=engine)
         ga = {r["id"]: r["label"] for r in a.vertices.collect()}
         gb = {r["id"]: r["label"] for r in b.vertices.collect()}
+        gc = {r["id"]: r["label"] for r in c.vertices.collect()}
         assert ga == gb, f"diverged at max_iter={k}"
+        assert ga == gc, f"caller-supplied engine diverged at max_iter={k}"
+    engine.unpersist()
 
 
 def test_bfs_duplicate_dataframe_sources(spark, make_edges, make_vertices):

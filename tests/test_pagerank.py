@@ -128,30 +128,37 @@ def test_metrics_recorded(spark, make_edges, make_vertices):
     assert m0.edges_traversed > 0 and m0.wall_ms > 0
 
 
-def test_fused_supersteps_equivalent(spark, make_edges, make_vertices):
-    """Optional superstep fusion (fuse_supersteps > 1) must produce the
-    same ranks, superstep count, and convergence as sequential execution —
-    blocks commit only while provably in the all-changed regime, and a
-    diverged block is discarded and replayed (engine falls back)."""
-    from mirrorofmapgraph_spark.plans.gas import GASEngine
+def test_driver_error_joins_materialize_thread(spark, make_edges, monkeypatch):
+    """A driver-side error in the speculative next-superstep build must
+    not leave the current step's materializing thread running: the loop
+    joins it before the error propagates."""
+    from mirrorofmapgraph_spark.plans import gas
 
+    started = []
+
+    class RecordingThread(gas.InheritableThread):
+        def start(self):
+            started.append(self)
+            super().start()
+
+    monkeypatch.setattr(gas, "InheritableThread", RecordingThread)
     edges = make_edges(MULTI)
-    out = {}
-    for k in (1, 4):
-        res = pagerank(
-            spark, edges, tol=1e-8, max_iter=60, damping=0.6,
-            engine=GASEngine(spark, edges, fuse_supersteps=k, collect_metrics=False),
-        )
-        out[k] = (
-            res.supersteps,
-            res.converged,
-            {r["id"]: r["rank"] for r in res.vertices.collect()},
-        )
-    assert out[1][0] == out[4][0]
-    assert out[1][1] == out[4][1]
-    assert set(out[1][2]) == set(out[4][2])
-    for i, v in out[1][2].items():
-        assert math.isclose(v, out[4][2][i], rel_tol=0, abs_tol=1e-9)
+    engine = gas.GASEngine(spark, edges)
+    build = engine._superstep_pull
+    calls = []
+
+    def failing_build(*args):
+        calls.append(1)
+        if len(calls) == 2:  # the speculative build during step 1
+            raise RuntimeError("injected driver-side failure")
+        return build(*args)
+
+    engine._superstep_pull = failing_build
+    with pytest.raises(RuntimeError, match="injected"):
+        pagerank(spark, edges, tol=1e-8, max_iter=10, damping=0.6, engine=engine)
+    assert started, "step 1 did not start a materializing thread"
+    assert not any(t.is_alive() for t in started)
+    engine.unpersist()
 
 
 def test_all_changed_regime_counts_senders_only(spark, make_edges):
