@@ -256,6 +256,13 @@ class GASEngine:
         #: program.has_out_edges (see GASProgram)
         self._sender_pred = None
         self._n_senders: int | None = None
+        #: per-partition row counts of the running state, [{"pid", "rows"}],
+        #: read once at loop entry (see _run_loop); every checkpoint of the
+        #: run records them as its partition lineage
+        self._lineage: list[dict] = []
+        #: (manifest path, manifest) of the last load_checkpoint, which the
+        #: resumed run checks against the state it loaded
+        self._loaded_manifest: tuple[str, dict] | None = None
 
     @staticmethod
     def _auto_partitions(rows: int, cap: int) -> int:
@@ -600,26 +607,23 @@ class GASEngine:
         frontier: DataFrame,
         metrics: list[SuperstepMetrics],
     ) -> str:
-        """Durable parquet checkpoint + JSON manifest with per-partition
-        lineage (row counts per partition) — the north rule's resume point."""
+        """Durable parquet checkpoint + JSON manifest — the north rule's
+        resume point. The manifest's partition lineage is the running
+        state's per-partition row counts, taken once at loop entry; they are
+        also the row counts of the ``part-NNNNN`` files written here (no
+        read-back job)."""
         base = os.path.join(self.checkpoint_dir, program_name, f"step={superstep}")
         vpath = os.path.join(base, "vertices")
         fpath = os.path.join(base, "frontier")
         vertices.write.mode("overwrite").parquet(vpath)
         frontier.write.mode("overwrite").parquet(fpath)
-        partition_lineage = [
-            {"pid": r["pid"], "rows": r["rows"]}
-            for r in self.spark.read.parquet(vpath)
-            .groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        ]
         manifest = {
             "program": program_name,
             "superstep": superstep,
             "vertices_path": vpath,
             "frontier_path": fpath,
-            "partition_lineage": partition_lineage,
+            "num_partitions": self.num_partitions,
+            "partition_lineage": self._lineage,
             "metrics": [m.as_dict() for m in metrics],
         }
         mpath = self._manifest_path(program_name)
@@ -641,9 +645,32 @@ class GASEngine:
             return None
         with open(mpath) as f:
             m = json.load(f)
+        self._loaded_manifest = (mpath, m)
         vertices = self.spark.read.parquet(m["vertices_path"])
         frontier = self.spark.read.parquet(m["frontier_path"])
         return m["superstep"], vertices, frontier, m["metrics"]
+
+    def _check_resumed(self, mpath: str, manifest: dict, frontier_size: int) -> None:
+        """Refuse a checkpoint whose files do not hold what its manifest
+        recorded (a lost or altered part file): compare the loaded state's
+        per-partition counts from the loop-entry job with the manifest's
+        lineage (only the totals when the partition count changed), and
+        the loaded frontier's rows with the last recorded frontier size."""
+        want = manifest["partition_lineage"]
+        if manifest.get("num_partitions") == self.num_partitions:
+            got_rows = [(p["pid"], p["rows"]) for p in self._lineage]
+            want_rows = sorted((p["pid"], p["rows"]) for p in want)
+        else:
+            got_rows = self._n_vertices
+            want_rows = sum(p["rows"] for p in want)
+        history = manifest["metrics"]
+        want_fs = history[-1]["frontier_size"] if history else frontier_size
+        if got_rows != want_rows or frontier_size != want_fs:
+            raise ValueError(
+                f"checkpoint does not match its manifest {mpath}: vertex rows "
+                f"{got_rows} (manifest {want_rows}), frontier rows "
+                f"{frontier_size} (manifest {want_fs})"
+            )
 
     # -- the superstep loop ------------------------------------------------
 
@@ -678,11 +705,13 @@ class GASEngine:
         """
         start_step = 0
         metrics: list[SuperstepMetrics] = []
+        resumed = None
         if resume and self.checkpoint_dir:
             ck = self.load_checkpoint(program.name)
             if ck is not None:
                 start_step, vertices, frontier, old_metrics = ck
                 metrics = [SuperstepMetrics(**m) for m in old_metrics]
+                resumed = self._loaded_manifest
 
         superstep_fn = (
             self._superstep_pull if program.mode == "pull" else self._superstep_push
@@ -727,7 +756,7 @@ class GASEngine:
         try:
             return self._run_loop(
                 program, vertices, frontier, superstep_fn, metrics,
-                start_step=start_step, max_iter=max_iter,
+                start_step=start_step, max_iter=max_iter, resumed=resumed,
             )
         finally:
             for k, v in prev.items():
@@ -744,9 +773,10 @@ class GASEngine:
         *,
         start_step: int,
         max_iter: int,
+        resumed: tuple[str, dict] | None,
     ) -> GASResult:
-        # LAZY entry cuts: the two scalar readbacks right below double as
-        # the materializing actions, so entry state+frontier cost two jobs
+        # LAZY entry cuts: the two readbacks right below double as the
+        # materializing actions, so entry state+frontier cost two jobs
         # instead of four (eager checkpoint + separate count each).
         vertices = self._cut(
             vertices.repartition(self.num_partitions, F.col("id")),
@@ -754,7 +784,20 @@ class GASEngine:
         )
         frontier = self._cut(frontier, eager=False)
         frontier_size = frontier.count()
-        self._n_vertices = vertices.count()
+        # The state's per-partition row counts in the same one job as the
+        # vertex count. State stays id-hash-partitioned at num_partitions
+        # and apply is a left join, so the counts hold at every superstep:
+        # they are the partition lineage every checkpoint of this run
+        # records, and the row counts of the part files it writes.
+        self._lineage = [
+            {"pid": pid, "rows": rows}
+            for pid, rows in sorted(
+                vertices.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+            )
+        ]
+        self._n_vertices = sum(p["rows"] for p in self._lineage)
+        if resumed is not None:
+            self._check_resumed(*resumed, frontier_size)
         # "all senders changed" refinement of the all-changed regime test
         # (see GASProgram.has_out_edges): count the distinct gather-side
         # senders once per run (cheap: the edge copy is already partitioned
@@ -767,6 +810,9 @@ class GASEngine:
             self._n_senders = self._endpoint_counts(self._dir_key(program))[0]
 
         step = start_step
+        # the last step on disk: the loaded one on resume, so a resumed
+        # converged or capped run does not rewrite it
+        written = start_step if resumed is not None else None
         stale: list[DataFrame] = []  # persisted frames to release (t-2)
         # superseded per-step state checkpoints to release (only frames the
         # loop itself cut — the caller's input is upstream of the entry cut
@@ -914,8 +960,9 @@ class GASEngine:
                 and step % self.checkpoint_every == 0
             ):
                 self.write_checkpoint(program.name, step, vertices, frontier, metrics)
+                written = step
 
-        if self.checkpoint_dir and self.checkpoint_every:
+        if self.checkpoint_dir and self.checkpoint_every and step != written:
             self.write_checkpoint(program.name, step, vertices, frontier, metrics)
         return GASResult(
             vertices=vertices,

@@ -7,17 +7,20 @@ dense longs.
 
 Scale note: the naive ``row_number() OVER (ORDER BY key)`` forces a single
 partition — unusable at 10^12 keys. Instead we range-partition the distinct
-keys, count rows per partition, broadcast the tiny per-partition offset
-table to the driver, and add ``offset + local_index`` via mapInPandas
-(Arrow-vectorized, no per-row Python). One sort shuffle total, fully
-parallel, ids dense and deterministic (= rank in key sort order).
+keys, count rows per partition on the driver, and add
+``offset[partition] + local_index`` as one JVM Column expression. One sort
+shuffle total, fully parallel, ids dense and deterministic (= rank in key
+sort order).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: low 33 bits of monotonically_increasing_id(): the row index within a
+#: partition (the upper 31 bits hold the partition id)
+_ROW_MASK = (1 << 33) - 1
 
 
 def assign_dense_ids(
@@ -38,7 +41,7 @@ def assign_dense_ids(
         .sortWithinPartitions(key_col)
         # materialize ONCE: repartitionByRange samples range boundaries per
         # RDD instantiation, so without pinning, the offsets job and the
-        # mapInPandas job could each sample different boundaries and the
+        # assignment job could each sample different boundaries and the
         # pid->offset map would silently mis-assign ids
         .localCheckpoint(eager=True)
     )
@@ -46,37 +49,30 @@ def assign_dense_ids(
     # Per-partition row counts -> exclusive prefix offsets (tiny; collected
     # to the driver — the analogue of the reference's 4-byte frontier-size
     # readback per superstep, enactor_vertex_centric.cuh:2866-2869).
-    counts = (
-        distinct.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid")
-        .count()
-        .collect()
+    sizes = dict(
+        distinct.groupBy(F.spark_partition_id().alias("pid")).count().collect()
     )
-    sizes = {r["pid"]: r["count"] for r in counts}
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
+    biggest = max(sizes.values(), default=0)
+    if biggest > _ROW_MASK:
+        raise ValueError(
+            f"a dense-id partition holds {biggest} keys; "
+            f"monotonically_increasing_id indexes at most {_ROW_MASK + 1} "
+            f"rows per partition (use more than {num_partitions} partitions)"
+        )
+    # a range partitioner may yield fewer partitions than asked for; no row
+    # lives past the last non-empty one
+    offsets, acc = [], 0
+    for pid in range(max(sizes, default=0) + 1):
+        offsets.append(acc)
+        acc += sizes.get(pid, 0)
 
-    b_offsets = spark.sparkContext.broadcast(offsets)
-    out_schema = f"{key_col} string, {id_col} long"
-
-    def add_ids(pdf_iter):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        base = b_offsets.value.get(pid, 0)
-        seen = 0
-        for pdf in pdf_iter:
-            n = len(pdf)
-            out = pd.DataFrame(
-                {key_col: pdf[key_col], id_col: range(base + seen, base + seen + n)}
-            )
-            seen += n
-            yield out
-
-    return distinct.mapInPandas(add_ids, schema=out_schema)
+    # monotonically_increasing_id() = (partition id << 33) + row index within
+    # the partition; the row index follows the pinned sorted order, so
+    # offset + index is the key's rank. Offsets travel as a literal array.
+    local_index = F.monotonically_increasing_id().bitwiseAND(F.lit(_ROW_MASK))
+    offsets_lit = F.array(*[F.lit(o).cast("long") for o in offsets])
+    offset = offsets_lit[F.spark_partition_id()]
+    return distinct.select(key_col, (offset + local_index).alias(id_col))
 
 
 def encode_edges(

@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import json
 import os
+import re
+
+import pytest
 
 from fixtures import random_graph
 from oracles import cc_ref, pagerank_ref
@@ -108,3 +111,106 @@ def test_labelprop_resume_equivalence(spark, make_edges, make_vertices, tmp_path
     want = {r["id"]: r["label"] for r in straight.vertices.collect()}
     assert got == want
     assert res.metrics[0].superstep == 1  # history preserved across resume
+
+
+def _chain(make_edges, n):
+    """Undirected path 0-1-...-(n-1): min-label CC needs n-1 supersteps."""
+    return symmetrize(canonicalize(make_edges([(i, i + 1, 1.0) for i in range(n - 1)])))
+
+
+def test_checkpoint_write_cadence(spark, make_edges, tmp_path, monkeypatch):
+    """One write per checkpointed step: the after-loop write runs only for
+    a step not yet on disk, and a resume never rewrites the step it loaded."""
+    writes: list[int] = []
+    real = GASEngine.write_checkpoint
+
+    def spy(self, program_name, superstep, *args, **kwargs):
+        writes.append(superstep)
+        return real(self, program_name, superstep, *args, **kwargs)
+
+    monkeypatch.setattr(GASEngine, "write_checkpoint", spy)
+    e = _chain(make_edges, 12)
+
+    def run(ckpt, max_iter, every, resume=False):
+        writes.clear()
+        res = connected_components(
+            spark, e, max_iter=max_iter, pre_symmetrized=True,
+            checkpoint_dir=str(tmp_path / ckpt), checkpoint_every=every,
+            resume=resume,
+        )
+        assert not res.converged
+        return list(writes)
+
+    assert run("a", 2, 1) == [1, 2]
+    assert run("a", 4, 1, resume=True) == [3, 4]
+    assert run("b", 3, 2) == [2, 3]
+    assert run("b", 3, 2, resume=True) == []  # resumed at the cap
+
+
+def _part_rows(vertices_path):
+    """{NNNNN: footer row count} of the part-NNNNN-*.parquet files."""
+    import pyarrow.parquet as pq
+
+    return {
+        int(f.split("-")[1]): pq.read_metadata(os.path.join(vertices_path, f)).num_rows
+        for f in os.listdir(vertices_path)
+        if f.startswith("part-")
+    }
+
+
+def _lineage(manifest):
+    return {p["pid"]: p["rows"] for p in manifest["partition_lineage"] if p["rows"]}
+
+
+def test_partition_lineage_matches_part_files(spark, make_edges, make_vertices, tmp_path):
+    """The manifest's partition lineage (taken once at loop entry) equals
+    the row counts of the part files each checkpoint writes, on fresh and
+    resumed runs, for CC and for PageRank (all-changed regime)."""
+    n = 200
+    edges = random_graph(n=n, m=600, seed=5)
+    cc_e = symmetrize(canonicalize(make_edges(edges)))
+    pr_e = canonicalize(make_edges(edges))
+
+    def cc_run(ckpt, max_iter, resume):
+        return connected_components(
+            spark, cc_e, vertices=make_vertices(n), max_iter=max_iter,
+            pre_symmetrized=True, checkpoint_dir=ckpt, checkpoint_every=1,
+            resume=resume,
+        )
+
+    def pr_run(ckpt, max_iter, resume):
+        return pagerank(
+            spark, pr_e, vertices=make_vertices(n), tol=1e-9, damping=0.5,
+            max_iter=max_iter, checkpoint_dir=ckpt, checkpoint_every=1,
+            resume=resume,
+        )
+
+    for name, run in (("cc", cc_run), ("pagerank", pr_run)):
+        ckpt = str(tmp_path / name)
+        for max_iter, resume in ((2, False), (3, True)):
+            run(ckpt, max_iter, resume)
+            manifest = json.load(open(os.path.join(ckpt, name, "manifest.json")))
+            assert manifest["superstep"] == max_iter
+            assert sum(p["rows"] for p in manifest["partition_lineage"]) == n
+            assert _part_rows(manifest["vertices_path"]) == _lineage(manifest), (
+                name, resume)
+
+
+def test_resume_refuses_truncated_checkpoint(spark, make_edges, tmp_path):
+    """A checkpoint that lost a part file no longer matches its manifest's
+    partition lineage: resume raises instead of continuing a partial state."""
+    e = _chain(make_edges, 40)
+    ckpt = str(tmp_path / "cut_ck")
+    connected_components(
+        spark, e, max_iter=2, pre_symmetrized=True,
+        checkpoint_dir=ckpt, checkpoint_every=1,
+    )
+    mpath = os.path.join(ckpt, "cc", "manifest.json")
+    vpath = json.load(open(mpath))["vertices_path"]
+    victim = sorted(f for f in os.listdir(vpath) if f.startswith("part-"))[0]
+    os.remove(os.path.join(vpath, victim))
+    with pytest.raises(ValueError, match=re.escape(mpath)):
+        connected_components(
+            spark, e, max_iter=4, pre_symmetrized=True,
+            checkpoint_dir=ckpt, checkpoint_every=1, resume=True,
+        )

@@ -4,12 +4,15 @@ table; sha256 per-row invariant (BASELINE.json input_hint)."""
 from __future__ import annotations
 
 import hashlib
+import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from fixtures import SMALL, SMALL_N
 from mirrorofmapgraph_spark.sources.codegen import synthesize_repo_table
 from mirrorofmapgraph_spark.sources.extract import build_link_graph, extract_edges, with_sha256
+from mirrorofmapgraph_spark.sources import ids as ids_module
 from mirrorofmapgraph_spark.sources.ids import assign_dense_ids
 
 
@@ -63,6 +66,32 @@ def test_dense_ids(spark):
     rows = sorted((r["key"], r["id"]) for r in ids.collect())
     assert [i for _, i in rows] == [0, 1, 2, 3, 4]  # dense, sorted by key
     assert [k for k, _ in rows] == ["k001", "k003", "k005", "k007", "k009"]
+
+
+@pytest.mark.parametrize("num_partitions", [7, 2000])
+def test_dense_ids_rank_in_key_order(spark, num_partitions):
+    """1,000 distinct keys, shuffled and duplicated: every id is the key's
+    rank in sorted order, also when most of 2,000 partitions are empty."""
+    rng = random.Random(17)
+    keys = [f"k{i:05d}" for i in rng.sample(range(100_000), 1000)]
+    rows = keys + rng.choices(keys, k=500)
+    rng.shuffle(rows)
+    df = spark.createDataFrame([(k,) for k in rows], "key string")
+    got = dict(
+        assign_dense_ids(df, "key", "id", num_partitions=num_partitions)
+        .toLocalIterator()
+    )
+    assert got == {k: i for i, k in enumerate(sorted(keys))}
+
+
+def test_dense_ids_refuse_oversized_partition(spark, monkeypatch):
+    """The id is offset + the row index held in the low bits of
+    monotonically_increasing_id; a partition with more rows than those bits
+    index must raise, not wrap into the next partition's ids."""
+    monkeypatch.setattr(ids_module, "_ROW_MASK", 9)  # 10 rows per partition
+    df = spark.createDataFrame([(f"k{i:02d}",) for i in range(30)], "key string")
+    with pytest.raises(ValueError, match="partition holds"):
+        assign_dense_ids(df, "key", "id", num_partitions=2)
 
 
 def test_build_link_graph_end_to_end(spark):
